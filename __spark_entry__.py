@@ -525,9 +525,9 @@ _CRAWL_CACHE: dict = {}
 def _crawl_result(spark, variant: str = "base"):
     """Deterministic 3-wave crawl; variants exercise alternative engine
     paths that MUST produce identical state (their entries reuse the same
-    oracle literals): 'cuckoo' = cuckoo seen-prefilter; 'http' = the real
-    batched-HTTP fetcher against a localhost server serving the synthetic
-    web (the deploy fetch path, driver-verified); 'hot' = a skewed web
+    oracle literals): 'http' = the real batched-HTTP fetcher against a
+    localhost server serving the synthetic web (the deploy fetch path,
+    driver-verified); 'hot' = a skewed web
     (host 0 holds 50% of all URLs) driving the salting + deferral
     machinery, with its own oracle literals."""
     if variant not in _CRAWL_CACHE:
@@ -543,9 +543,6 @@ def _crawl_result(spark, variant: str = "base"):
             shape="hot-host" if variant == "hot" else "mixed")
         tmp = tempfile.mkdtemp(prefix=f"grawler_entry_{variant}_")
         cfg = CrawlConfig()
-        if variant == "cuckoo":
-            cfg = dataclasses.replace(cfg, seen_filter="cuckoo",
-                                      cuckoo_buckets=1 << 8)
         if variant == "http":
             import threading
             from http.server import (BaseHTTPRequestHandler,
@@ -644,12 +641,6 @@ def q_crawl_store(spark, sf_dir):
 
 def q_crawl_seen(spark, sf_dir):
     return _crawl_result(spark).seen().select("url", "first_wave")
-
-
-def q_crawl_seen_cuckoo(spark, sf_dir):
-    """Same crawl through the CUCKOO seen-prefilter: the filter family must
-    never change results (oracle literal shared with crawl_seen)."""
-    return _crawl_result(spark, "cuckoo").seen().select("url", "first_wave")
 
 
 def q_crawl_seen_http(spark, sf_dir):
@@ -922,7 +913,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_clean": q_corpus_clean,
         "crawl_store": q_crawl_store,
         "crawl_seen": q_crawl_seen,
-        "crawl_seen_cuckoo": q_crawl_seen_cuckoo,
         "crawl_seen_http": q_crawl_seen_http,
         "crawl_trace": q_crawl_trace,
         "crawl_trace_http": q_crawl_trace_http,
@@ -978,9 +968,8 @@ def _values_sql(spec: dict) -> str:
 
 
 # entries that must equal another entry's expected rows (alternative engine
-# paths: filter family / fetch transport cannot change crawl results)
+# paths: fetch transport / resume / filter sizing cannot change results)
 _ORACLE_ALIASES = {
-    "crawl_seen_cuckoo": "crawl_seen",
     "crawl_seen_http": "crawl_seen",
     "crawl_trace_http": "crawl_trace",
     # crash-resume must reproduce the uninterrupted crawl exactly

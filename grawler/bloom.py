@@ -2,20 +2,25 @@
 with vectorized xxhash64; SURVEY.md §4.3 item 1).
 
 The exact seen set at 10^10 URLs cannot be shuffled against every wave's
-frontier; the bloom prefilter routes the (overwhelmingly common) definitely-
-unseen rows around the anti-join entirely:
+new children; the bloom prefilter routes the (overwhelmingly common)
+definitely-unseen children around the exact check entirely:
 
   build:  seen urls -> segment = xxhash64(url) mod S; k bit positions =
           xxhash64(url, i) mod m  (all JVM-side) -> applyInPandas per
           segment packs a numpy bit array -> (segment, bits, n_keys) rows.
-  probe:  frontier rows compute the same segment/positions natively; one
-          Arrow pass tests bits against the broadcast segment map.
-  dedup:  definitely-new rows skip the shuffle; only maybe-seen rows take
-          the exact left-anti join (bloom false positives are harmless,
-          false negatives are impossible -> exactness preserved).
+  probe:  the wave's deduped children compute the same segment/positions
+          natively; one Arrow pass tests bits against the broadcast
+          segment map (or, above the broadcast budget, a cogroup by
+          segment).
+  dedup:  definitely-new rows skip the exact check; only maybe-seen rows
+          take it (the engine plugs in exactcheck.bucketed_anti_join; bloom
+          false positives are harmless, false negatives are impossible ->
+          exactness preserved).
 
-Segments are persistable rows (BLOOM_SEGMENT schema), so wave checkpoints
-carry bloom state incrementally (bitwise OR of per-wave segment deltas).
+The frontier itself is never probed: it is disjoint from seen by
+construction (grawler.engine, step 1). Segments are persistable rows
+(BLOOM_SEGMENT schema), so wave checkpoints carry bloom state
+incrementally (bitwise OR of per-wave segment deltas).
 """
 
 from __future__ import annotations
@@ -133,7 +138,8 @@ def bloom_anti_join(
     exact_join=None,
     persisted: list | None = None,
 ) -> DataFrame:
-    """Exact frontier-minus-seen with bloom shuffle avoidance.
+    """Exact frontier-minus-seen with bloom shuffle avoidance. `frontier`
+    is any url-keyed frame (the engine passes a wave's new children).
 
     segments=None falls back to the plain anti-join. `exact_join` plugs in
     the exact check for maybe-seen rows (the engine passes

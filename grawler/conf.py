@@ -34,26 +34,21 @@ class CrawlConfig:
     blocked_paths: tuple[str, ...] = ("/robots.txt",)
     max_waves: int = 50
     max_depth: int = 64
-    # skew handling: hosts holding more than this share of a wave get salted
-    hot_host_share: float = 0.20
+    # skew handling: politeness top-k is salted over this many buckets
     salt_buckets: int = 16
-    # seen-set prefilter (shuffle avoidance; exactness preserved by the
-    # anti-join on maybe-seen rows). north_star allows bloom OR cuckoo:
-    # seen_filter selects the family; both share the segment state contract.
-    use_bloom: bool = True
-    seen_filter: str = "bloom"           # "bloom" | "cuckoo"
-    cuckoo_buckets: int = 1 << 12        # per segment (power of two)
-    cuckoo_slots: int = 4
+    # bloom seen-prefilter over new children (routes definitely-unseen
+    # rows around the exact check; exactness preserved by that check on
+    # maybe-seen rows)
     bloom_segments: int = 64
     bloom_m: int = 1 << 17               # bits per segment; size up at scale
     bloom_num_hashes: int = 4
     # above this total filter size the probe switches from the broadcast
     # path to the cogroup path (no driver collect; docs/SCALE.md §3)
     bloom_broadcast_max_bytes: int = 64 << 20
-    # seen-filter saturation threshold: at compaction waves the engine
-    # estimates filter occupancy (bloom bit-fill / cuckoo slot load) and
-    # rebuilds from the exact seen set with doubled m/buckets above this —
-    # a statically-sized filter is useless once the crawl outgrows it
+    # bloom saturation threshold: at compaction waves the engine measures
+    # the max per-segment bit-fill and rebuilds from the exact seen set
+    # with doubled m above this — a statically-sized filter is useless
+    # once the crawl outgrows it
     filter_max_load: float = 0.5
     # exact checks against the bucketed seen/store_keys tables broadcast
     # the probe keys (zero-shuffle path) up to this many rows, then degrade

@@ -4,8 +4,7 @@ Spark-first re-expression of the reference crawl loop (SURVEY.md §3.2):
 the per-URL imperative pipeline /root/reference/src/crawler.go:116-188
 becomes, per wave:
 
-  frontier snapshot
-    -> anti-join seen                       (F3/J1; src/crawler.go:190-192)
+  frontier snapshot (disjoint from seen: children are checked at enqueue)
     -> robots TTL refetch + broadcast join + vectorized matcher
                                             (S4/S5/F5/C9; src/crawler.go:222-254)
     -> per-host politeness top-k, salted    (F4; src/crawler.go:194-199 intended)
@@ -15,6 +14,8 @@ becomes, per wave:
     -> parse UDF: children+images+metadata  (C1-C6; src/parsers/html.go)
     -> explode children -> canonicalize -> dedup -> next frontier
                                             (F1/F2/F6/J4; src/utils/utils.go:161-197)
+    -> children minus seen: bloom prefilter + bucketed exact check
+                                            (F3/J1; src/crawler.go:190-192)
     -> explode images -> decode+phash -> store delta (first-wins MERGE)
                                             (C10/K1; src/db/db.go:46-69)
     -> commit wave snapshot (lineage manifest = atomic resume point)
@@ -158,95 +159,14 @@ def decode_phash_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
 
 
 def _filter_meta(cfg: CrawlConfig) -> dict:
-    """The cfg-default seen-filter family + parameters. The engine treats
-    this dict as STATE (self._filter_params): committed with every wave,
-    adopted back on resume, and GROWN in place when the filter saturates —
-    so the persisted segment bytes are always decoded with the parameters
-    they were built under. A resume under a different filter FAMILY is
-    detected and triggers a rebuild from the exact seen set (ADVICE r2:
-    decoding bloom bytes with the cuckoo decoder can return false
-    'definitely new' for seen URLs, silently bypassing the exact check)."""
-    if not cfg.use_bloom:
-        return {"family": "none"}
-    if cfg.seen_filter == "cuckoo":
-        return {"family": "cuckoo", "segments": cfg.bloom_segments,
-                "buckets": cfg.cuckoo_buckets, "slots": cfg.cuckoo_slots}
+    """The cfg-default bloom parameters. The engine treats this dict as
+    STATE (self._filter_params): committed with every wave, adopted back on
+    resume, and grown in place (doubled m) when the filter saturates — so
+    the persisted segment bytes are always decoded with the parameters they
+    were built under. Segments whose recorded meta is not a bloom record
+    are never decoded: resume rebuilds them from the exact seen set."""
     return {"family": "bloom", "segments": cfg.bloom_segments,
             "m": cfg.bloom_m, "k": cfg.bloom_num_hashes}
-
-
-def _seen_filter_fns(cfg: CrawlConfig, params: dict | None = None):
-    """(probe, build, merge, load) for the seen-prefilter described by
-    `params` (a _filter_meta-shaped dict; defaults to the cfg-derived
-    one). Both families share the segment state contract (BLOOM_SEGMENT
-    rows). `load` estimates the filter's occupancy in [0, 1] — the
-    engine's saturation trigger: a STATIC filter sized for 10^8 keys is
-    useless at 10^10 (bloom fpr -> 1, cuckoo inserts fail), so at
-    compaction waves the engine rebuilds from the exact seen set with
-    doubled m/buckets when load exceeds cfg.filter_max_load."""
-    p = params or _filter_meta(cfg)
-    if p["family"] == "none":
-        raise ValueError(
-            "_seen_filter_fns called for family 'none': there is no "
-            "prefilter to build/probe — callers must branch before here")
-    n_segments = int(p.get("segments", cfg.bloom_segments))
-    if p["family"] == "cuckoo":
-        from . import cuckoo
-
-        buckets, slots = int(p["buckets"]), int(p["slots"])
-
-        def probe(frontier, seen, segs, exact_join=None, persisted=None):
-            total_bytes = n_segments * buckets * slots * 2
-            fn = (cuckoo.cuckoo_anti_join
-                  if total_bytes <= cfg.bloom_broadcast_max_bytes
-                  else cuckoo.cuckoo_anti_join_cogroup)
-            return fn(frontier, seen, segs, buckets=buckets,
-                      slots=slots, n_segments=n_segments,
-                      exact_join=exact_join, persisted=persisted)
-
-        def build(delta):
-            return cuckoo.build_segments(
-                delta, n_segments=n_segments, buckets=buckets, slots=slots)
-
-        def merge(old, new):
-            return cuckoo.merge_segment_sets(
-                old, new, buckets=buckets, slots=slots)
-
-        def load(segs):
-            return cuckoo.load_factor(segs)
-    else:
-        m, k = int(p["m"]), int(p["k"])
-
-        def probe(frontier, seen, segs, exact_join=None, persisted=None):
-            total_bytes = n_segments * (m // 8)
-            fn = (bloom.bloom_anti_join
-                  if total_bytes <= cfg.bloom_broadcast_max_bytes
-                  else bloom.bloom_anti_join_cogroup)
-            return fn(frontier, seen, segs, m=m, k=k,
-                      n_segments=n_segments,
-                      exact_join=exact_join, persisted=persisted)
-
-        def build(delta):
-            return bloom.build_segments(
-                delta, n_segments=n_segments, m=m, k=k)
-
-        def merge(old, new):
-            return bloom.merge_segment_sets(old, new)
-
-        def load(segs):
-            return bloom.fill_fraction(segs, m)
-
-    return probe, build, merge, load
-
-
-def _grow_filter_params(params: dict) -> dict:
-    """Double the capacity-bearing parameter (power-of-two preserved)."""
-    grown = dict(params)
-    if params["family"] == "cuckoo":
-        grown["buckets"] = int(params["buckets"]) * 2
-    else:
-        grown["m"] = int(params["m"]) * 2
-    return grown
 
 
 @dataclass
@@ -312,9 +232,9 @@ class CrawlEngine:
         # bucketed layout — refreshed by run() after every wave; None makes
         # run_wave fall back to the plain anti-join (direct-call tests)
         self._seen_bucketed = None
-        # live seen-filter parameters (family + sizing): starts at the cfg
-        # defaults, adopted from committed meta on resume, doubled in place
-        # when the filter saturates (see run_wave's compaction-time check)
+        # live bloom parameters: start at the cfg defaults, adopted from
+        # committed meta on resume, m doubled in place when the filter
+        # saturates (see run_wave's compaction-time check)
         self._filter_params = _filter_meta(cfg)
         self.agent_allowed = make_agent_allowed_udf(cfg.user_agent)
         self.robots_cache_init = robots_cache_init
@@ -358,6 +278,11 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
         )
 
+    def _build_segments(self, urls: DataFrame) -> DataFrame:
+        p = self._filter_params
+        return bloom.build_segments(urls, n_segments=int(p["segments"]),
+                                    m=int(p["m"]), k=int(p["k"]))
+
     # ----------------------------------------------------------- the wave
 
     def run_wave(
@@ -369,34 +294,13 @@ class CrawlEngine:
         stale_before = ts - dt.timedelta(days=cfg.robots_ttl_days)
         persisted: list[DataFrame] = []
 
-        # 1. F3/J1 — exact dedup vs seen; a bloom OR cuckoo prefilter routes
-        # definitely-unseen rows around the shuffle (north_star: partitioned
-        # xxhash64 bloom/cuckoo; exactness preserved — see grawler.bloom /
-        # grawler.cuckoo). When the store provides the bucketed seen layout,
-        # the exact check for maybe-seen rows partition-prunes + broadcasts
-        # (grawler.exactcheck) instead of shuffling the full seen table —
-        # the round-2 O(total-state) cost — and degrades to a pruned-subset
-        # shuffle above the broadcast budget.
-        exact = None
-        if self._seen_bucketed is not None:
-            _sb, _snb = self._seen_bucketed
-
-            def exact(mb, _sb=_sb, _snb=_snb):
-                return bucketed_anti_join(
-                    mb, _sb, _snb, "url",
-                    cfg.seen_probe_broadcast_rows, persisted)
-
-        if cfg.use_bloom and bloom_segments is not None:
-            probe, _b_, _m_, _l_ = _seen_filter_fns(cfg, self._filter_params)
-            cand = probe(frontier, seen, bloom_segments,
-                         exact_join=exact, persisted=persisted)
-        elif exact is not None:
-            cand = exact(frontier)
-        else:
-            cand = frontier.join(seen.select("url"), "url", "left_anti")
+        # 1. F3/J1 needs no step here: frontier ∩ seen = ∅, because every
+        # frontier row entered it through step 7's seen check (or as a seed
+        # of a fresh crawl, when seen is empty). The oracle keeps the check
+        # as the reference; the golden tests pin the invariant.
 
         # 2. robots: TTL refetch for hosts in play (S4/S5/C9/K3)
-        hosts = cand.select("host").distinct()
+        hosts = frontier.select("host").distinct()
         joined = hosts.join(robots_cache, "host", "left")
         stale = joined.where(
             F.col("robots_txt").isNull()
@@ -416,7 +320,7 @@ class CrawlEngine:
         # (computed once at enqueue): re-deriving it here — parse_url or a
         # second percent-decode — diverges from the oracle on double-encoded
         # hrefs (%2520).
-        with_rob = cand.join(
+        with_rob = frontier.join(
             F.broadcast(new_cache.select("host", "robots_txt")), "host", "left"
         )
         allowed = with_rob.where(
@@ -475,7 +379,7 @@ class CrawlEngine:
         ).withColumn("_op", F.lit("add"))
 
         if n_scheduled == 0:
-            # every candidate was robots-blocked (or already seen): the
+            # every frontier row was robots-blocked: the
             # oracle pops those frontier rows and stops BEFORE counting the
             # wave or appending metrics (oracle.crawl) — commit only the
             # frontier/robots deltas so state matches, no metrics row.
@@ -583,8 +487,7 @@ class CrawlEngine:
         )
         # O(wave)-sized exclusions (this wave's new urls + deferred rows)
         # ride one anti-join with the children shuffle; the persisted seen
-        # table goes through the bucketed exact check so it is never
-        # shuffled (it was the other O(total-state) shuffle in round 2)
+        # table is checked after the dedup (F3/J1, below)
         exclude_small = seen_delta.select("url").unionByName(
             deferred.select("url"))
         # J4 first-parent per child url = min by (seq, pos). groupBy +
@@ -603,10 +506,38 @@ class CrawlEngine:
                     *[F.col(f"_s.{c}").alias(c) for c in _kid_payload])
             .join(exclude_small, "url", "left_anti")
         )
-        new_children = (
-            exact(new_children) if exact is not None
-            else new_children.join(seen.select("url"), "url", "left_anti")
-        )
+        # F3/J1 — children minus seen. The bloom prefilter routes
+        # definitely-unseen children around the exact check (false
+        # positives are re-checked, false negatives are impossible, so the
+        # result is exact). When the store provides the bucketed seen
+        # layout, the exact check partition-prunes + broadcasts
+        # (grawler.exactcheck) instead of shuffling the seen table, and
+        # degrades to a pruned-subset shuffle above the broadcast budget.
+        exact = None
+        if self._seen_bucketed is not None:
+            _sb, _snb = self._seen_bucketed
+
+            def exact(mb, _sb=_sb, _snb=_snb):
+                return bucketed_anti_join(
+                    mb, _sb, _snb, "url",
+                    cfg.seen_probe_broadcast_rows, persisted)
+
+        if bloom_segments is not None:
+            p = self._filter_params
+            m, k, n_seg = int(p["m"]), int(p["k"]), int(p["segments"])
+            # above the broadcast budget the cogroup path holds one
+            # segment per task instead (docs/SCALE.md §3)
+            probe = (bloom.bloom_anti_join
+                     if n_seg * (m // 8) <= cfg.bloom_broadcast_max_bytes
+                     else bloom.bloom_anti_join_cogroup)
+            new_children = probe(new_children, seen, bloom_segments,
+                                 m=m, k=k, n_segments=n_seg,
+                                 exact_join=exact, persisted=persisted)
+        elif exact is not None:
+            new_children = exact(new_children)
+        else:
+            new_children = new_children.join(
+                seen.select("url"), "url", "left_anti")
         frontier_adds = (
             new_children if wave > 0
             else deferred.unionByName(new_children)
@@ -766,39 +697,26 @@ class CrawlEngine:
                 # emptiness probe costs one first-partition task, the
                 # skipped write costs a full (if empty) table job
                 del tables["robots_cache"]
-        if cfg.use_bloom:
-            _p_, build, merge, load = _seen_filter_fns(
-                cfg, self._filter_params)
-            rebuilt = False
-            if compacting and bloom_segments is not None:
-                # saturation check (amortized like nb growth): a static
-                # filter sized at crawl start goes useless as seen grows —
-                # bloom fpr -> 1 routes everything to the exact check,
-                # cuckoo segments degrade to always-maybe. Rebuild from the
-                # exact seen set (the source of truth; segments are a
-                # cache) with doubled capacity, and commit the grown
-                # parameters as state so probes and resumes decode the new
-                # bytes correctly.
-                if load(bloom_segments) > cfg.filter_max_load:
-                    self._filter_params = _grow_filter_params(
-                        self._filter_params)
-                    _p2, build2, _m2, _l2 = _seen_filter_fns(
-                        cfg, self._filter_params)
-                    tables["bloom"] = build2(
-                        seen.select("url")
-                        .unionByName(seen_delta.select("url")))
-                    rebuilt = True
-            if not rebuilt and not (
-                wave > 0 and not compacting and n_parsed == 0
-                and bloom_segments is not None
-            ):  # empty seen delta + existing filter: merge is the
-                # identity, keep the previous snapshot instead of
-                # rewriting identical segment bytes
-                new_segs = build(seen_delta)
-                tables["bloom"] = (
-                    merge(bloom_segments, new_segs)
-                    if bloom_segments is not None else new_segs
-                )
+        m = int(self._filter_params["m"])
+        if (compacting and bloom_segments is not None
+                and bloom.fill_fraction(bloom_segments, m)
+                > cfg.filter_max_load):
+            # saturation check (amortized like nb growth): a static filter
+            # sized at crawl start goes useless as seen grows (fpr -> 1
+            # routes everything to the exact check). Rebuild from the exact
+            # seen set (the source of truth; segments are a cache) with
+            # doubled m, and commit the grown parameters as state so probes
+            # and resumes decode the new bytes correctly.
+            self._filter_params = dict(self._filter_params, m=2 * m)
+            tables["bloom"] = self._build_segments(
+                seen.select("url").unionByName(seen_delta.select("url")))
+        elif bloom_segments is None:
+            tables["bloom"] = self._build_segments(seen_delta)
+        elif compacting or n_parsed > 0:
+            # (an empty seen delta makes the merge the identity: the
+            # previous snapshot stays instead of identical segment bytes)
+            tables["bloom"] = bloom.merge_segment_sets(
+                bloom_segments, self._build_segments(seen_delta))
         manifest = self.state.commit_wave(
             wave, tables, meta={"seen_filter": self._filter_params})
         for df in persisted:
@@ -846,36 +764,20 @@ class CrawlEngine:
             robots_cache = self.state.read("robots_cache")
             if robots_cache is None:
                 robots_cache = spark.createDataFrame([], schemas.ROBOTS)
+            # persisted segment BYTES are only trusted under a bloom
+            # record: they are then decoded with the committed parameters
+            # (possibly grown past the cfg defaults by saturation). Any
+            # other warehouse (no filter, or another filter family) gets
+            # its segments rebuilt from the exact seen set — decoding
+            # foreign bytes, or a filter missing the pre-resume seen URLs,
+            # would declare seen children 'definitely new'.
             bloom_segments = self.state.read("bloom")
-            # seen-filter compatibility gate: persisted segment BYTES are
-            # family/parameter-specific; decoding them under a different
-            # cfg would return false 'definitely new' for seen URLs. On
-            # mismatch, rebuild segments from the exact seen set (always
-            # safe: seen is the source of truth, segments are a cache).
-            recorded = (self.state.read_meta() or {}).get("seen_filter")
-            if bloom_segments is not None and recorded is not None:
-                if recorded.get("family") == self._filter_params["family"]:
-                    # same family: ADOPT the committed parameters — they
-                    # are the ones the persisted bytes were built under
-                    # (possibly grown past the cfg defaults by saturation)
-                    self._filter_params = recorded
-                elif recorded != self._filter_params:
-                    import warnings
-
-                    warnings.warn(
-                        f"seen-filter family changed across resume "
-                        f"(committed {recorded}, now "
-                        f"{self._filter_params}); rebuilding segments "
-                        "from the seen table")
-                    if self._filter_params["family"] == "none":
-                        # use_bloom turned off across the resume: there is
-                        # no prefilter to rebuild — the exact probe alone
-                        # is still correct (segments are only a cache).
-                        bloom_segments = None
-                    else:
-                        _p, build, _m, _l = _seen_filter_fns(
-                            cfg, self._filter_params)
-                        bloom_segments = build(seen)
+            recorded = self.state.read_meta().get("seen_filter") or {}
+            if (bloom_segments is not None
+                    and recorded.get("family") == "bloom"):
+                self._filter_params = recorded
+            else:
+                bloom_segments = self._build_segments(seen)
         else:
             start = 0
             frontier = self._seed_frontier(seeds)
@@ -910,8 +812,7 @@ class CrawlEngine:
                 self.state.read_bucketed("seen")
                 if hasattr(self.state, "read_bucketed") else None)
             robots_cache = self.state.read("robots_cache")
-            if cfg.use_bloom:
-                bloom_segments = self.state.read("bloom")
+            bloom_segments = self.state.read("bloom")
         return CrawlResult(waves=waves, state=self.state)
 
 

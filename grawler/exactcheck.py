@@ -1,7 +1,7 @@
 """Exact membership checks against BUCKETED persisted key tables.
 
 The problem (VERDICT r2 "What's wrong" #1): `probe.join(seen, key,
-"left_anti")` reduces the PROBE side via the bloom/cuckoo prefilter, but
+"left_anti")` reduces the PROBE side via the bloom prefilter, but
 Spark must still shuffle the SEEN side every wave — a left-anti join can
 only broadcast its right side, and `seen` is the right side. At 10^10 URLs
 that is hundreds of GB of shuffle per wave, the one O(total-state) cost the
@@ -24,8 +24,8 @@ stays bounded (store.bucket_target_rows). The probe then:
 
 Cost model: O(|probe| x bucket_size) bytes scanned, ZERO shuffle of the big
 table — flat while the table grows, because compaction grows nb to hold
-bucket_size constant (benched in tools/seen_probe_cost.py ->
-BENCH/SEEN_PROBE.md). When the probe side exceeds the broadcast budget the
+bucket_size constant (recorded in BENCH/SEEN_PROBE.md by a since-retired
+harness; perfbench reports exactcheck.probe_s). When the probe side exceeds the broadcast budget the
 check degrades to a shuffle anti-join against the PRUNED subset only —
 never worse than the round-2 full-table shuffle.
 

@@ -23,6 +23,9 @@ Per wave:
 
 The engine's wave loop (grawler.engine) implements the same contract with
 DataFrames; tests compare trace / seen / store / frontier byte-for-byte.
+The engine omits step 1: step 8 checks every child against seen at
+enqueue, so the frontier never holds a seen URL; the oracle keeps step 1
+as the reference.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ conventions on top of it:
 
 Used by tests (and the VALUES-oracle generator) to recompute engine hashes
 WITHOUT Spark, so hash-dependent operators (minhash banding, simhash
-votes, bloom/cuckoo positions) get end-to-end independent oracles.
+votes, bloom positions) get end-to-end independent oracles.
 tests/test_xxh.py asserts bit-for-bit equality with Spark's xxhash64 over
 lengths 0..64 and int/long/multi-arg columns.
 """

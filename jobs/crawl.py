@@ -42,9 +42,6 @@ def main():
                     help="fetch pages and robots.txt via real batched HTTP "
                          "(grawler.fetch.HttpFetcher) instead of the "
                          "fetch-sim join against --pages/--robots")
-    ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                    default="bloom",
-                    help="URL-seen prefilter family (both exact-preserving)")
     ap.add_argument("--bucket-target-rows", type=int, default=1 << 20,
                     help="target rows per bucket for the bucketed "
                          "seen/store_keys layout; compaction grows the "
@@ -75,8 +72,7 @@ def main():
         from grawler.session import get_spark
 
         spark = get_spark("grawler-crawl")
-    cfg = CrawlConfig(seen_filter=args.seen_filter,
-                      seen_probe_broadcast_rows=args.probe_broadcast_rows)
+    cfg = CrawlConfig(seen_probe_broadcast_rows=args.probe_broadcast_rows)
 
     def _store(warehouse):
         from grawler.store import LocalSnapshotStore

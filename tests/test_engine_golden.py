@@ -14,6 +14,7 @@ import pytest
 from grawler import codecs, oracle, synthgen
 from grawler.conf import CrawlConfig
 from grawler.engine import build_engine
+from grawler.store import LocalSnapshotStore
 
 CFG = CrawlConfig()
 
@@ -49,6 +50,9 @@ def _assert_equal(res, o, web=None):
     ef = sorted(r["url"] for r in res.frontier().collect())
     of = sorted(r["url"] for r in o.frontier)
     assert ef == of
+    # frontier ∩ seen = ∅: the invariant that lets the engine skip the
+    # oracle's step 1 (frontier minus seen)
+    assert not (set(ef) & set(seen))
     # A3 accounting: per-host fetch counts equal the oracle trace
     from collections import Counter
 
@@ -112,29 +116,6 @@ def test_resume_no_duplicate_fetches(spark, tmp_path):
     assert a == b
     seen_urls = [r["url"] for r in resumed.seen().collect()]
     assert len(seen_urls) == len(set(seen_urls))  # zero duplicate fetches
-
-
-def test_bloom_on_off_equivalent(spark, tmp_path):
-    """Bloom prefilter must never change results (false negatives
-    impossible; positives re-checked by the exact anti-join)."""
-    import dataclasses
-
-    web = synthgen.generate(seed=3, n_pages=60, shape="mixed")
-    on_dir, off_dir = tmp_path / "on", tmp_path / "off"
-    cfg_on = dataclasses.replace(CFG, use_bloom=True, bloom_m=1 << 14)
-    cfg_off = dataclasses.replace(CFG, use_bloom=False)
-    e1, s1 = build_engine(spark, web, str(on_dir), cfg_on)
-    r_on = e1.run(s1, max_waves=3)
-    e2, s2 = build_engine(spark, web, str(off_dir), cfg_off)
-    r_off = e2.run(s2, max_waves=3)
-    a = [(r["wave"], r["seq"], r["url"])
-         for r in r_on.trace().orderBy("wave", "seq").collect()]
-    b = [(r["wave"], r["seq"], r["url"])
-         for r in r_off.trace().orderBy("wave", "seq").collect()]
-    assert a == b
-    sa = sorted(r["url"] for r in r_on.seen().collect())
-    sb = sorted(r["url"] for r in r_off.seen().collect())
-    assert sa == sb
 
 
 def test_seed_list_json_loader(spark, tmp_path):
@@ -203,80 +184,69 @@ def test_all_blocked_wave_not_counted(spark, tmp_path):
     assert resumed.trace() is None                  # absent seen/trace tables
 
 
-def test_resume_with_different_seen_filter_rebuilds(spark, tmp_path):
-    """Resuming a bloom-filtered warehouse with --seen-filter cuckoo must
-    NOT reinterpret the persisted segment bytes with the other family's
-    decoder (false 'definitely new' -> duplicate fetches); the recorded
-    filter meta triggers a rebuild from the exact seen set, and the crawl
-    completes identically to an uninterrupted run (ADVICE r2)."""
-    import dataclasses
-    import warnings as _warnings
+class _LegacyFilterStore(LocalSnapshotStore):
+    """Leaves the seen-filter state of an older engine: every commit
+    records `meta` as the filter and writes `segments` (or no segments at
+    all) as the `bloom` table, whatever the engine handed in. The writing
+    engine never reads that table back, so it crawls correctly on its
+    exact check alone."""
 
+    def __init__(self, spark, path, meta, segments):
+        super().__init__(spark, path)
+        self._meta, self._segments = meta, segments
+
+    def commit_wave(self, wave, tables, meta=None):
+        tables = {n: df for n, df in tables.items() if n != "bloom"}
+        if self._segments is not None:
+            tables["bloom"] = self._segments
+        return super().commit_wave(
+            wave, tables, meta={"seen_filter": self._meta})
+
+    def read(self, table, upto_wave=None):
+        return None if table == "bloom" else super().read(table, upto_wave)
+
+
+@pytest.mark.parametrize("family", ["none", "cuckoo"])
+def test_resume_legacy_filter_warehouse_rebuilds(spark, tmp_path, family):
+    """A warehouse whose recorded filter is not a bloom record must get
+    its segments rebuilt from the exact seen set on resume:
+      'none'   — the filter was off, so there is no `bloom` table; a filter
+                 built from post-resume deltas alone would miss the
+                 pre-resume seen URLs;
+      'cuckoo' — a `bloom` table of another family's bytes; all-zero slot
+                 tables stand in for them, so decoding them as bloom bits
+                 would pass every seen child as definitely new.
+    Either mistake re-enqueues seen URLs; the resumed crawl's state must
+    equal the uninterrupted (oracle) crawl's, with no URL fetched twice."""
     web = synthgen.generate(seed=5, n_pages=80, shape="diamond")
-    full_dir, part_dir = tmp_path / "full", tmp_path / "part"
-    e1, s1 = build_engine(spark, web, str(full_dir), CFG)
-    full = e1.run(s1, max_waves=4)
-
-    e2, s2 = build_engine(spark, web, str(part_dir), CFG)  # bloom family
-    e2.run(s2, max_waves=2)
-    cfg_cuckoo = dataclasses.replace(CFG, seen_filter="cuckoo",
-                                     cuckoo_buckets=1 << 10)
-    e3, s3 = build_engine(spark, web, str(part_dir), cfg_cuckoo)
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        resumed = e3.run(s3, max_waves=4, resume=True)
-    assert any("seen-filter family changed" in str(x.message)
-               for x in w)
-    a = sorted((r["wave"], r["seq"], r["url"]) for r in full.trace().collect())
-    b = sorted((r["wave"], r["seq"], r["url"])
-               for r in resumed.trace().collect())
-    assert a == b
-    seen_urls = [r["url"] for r in resumed.seen().collect()]
-    assert len(seen_urls) == len(set(seen_urls))  # no duplicate fetches
-
-
-def test_resume_with_filter_turned_off(spark, tmp_path):
-    """Resuming a bloom-filtered warehouse with use_bloom=False must not
-    crash (ADVICE r3: the family-mismatch rebuild branch called
-    _seen_filter_fns for family 'none', which fell into the bloom branch
-    and raised KeyError 'm') — there is no prefilter to rebuild; the
-    exact probe alone keeps results identical."""
-    import dataclasses
-    import warnings as _warnings
-
-    web = synthgen.generate(seed=5, n_pages=80, shape="diamond")
-    full_dir, part_dir = tmp_path / "full", tmp_path / "part"
-    e1, s1 = build_engine(spark, web, str(full_dir), CFG)
-    full = e1.run(s1, max_waves=4)
-
-    e2, s2 = build_engine(spark, web, str(part_dir), CFG)  # bloom family
-    e2.run(s2, max_waves=2)
-    cfg_off = dataclasses.replace(CFG, use_bloom=False)
-    e3, s3 = build_engine(spark, web, str(part_dir), cfg_off)
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        resumed = e3.run(s3, max_waves=4, resume=True)
-    assert any("seen-filter family changed" in str(x.message) for x in w)
-    a = sorted((r["wave"], r["seq"], r["url"]) for r in full.trace().collect())
-    b = sorted((r["wave"], r["seq"], r["url"])
-               for r in resumed.trace().collect())
-    assert a == b
+    if family == "none":
+        meta, segments = {"family": "none"}, None
+    else:
+        # 2^11 buckets x 4 slots x 2 B: the byte size of a default bloom
+        # segment, so a trusting engine would decode them without error
+        meta = {"family": "cuckoo", "segments": 64, "buckets": 1 << 11,
+                "slots": 4}
+        segments = spark.createDataFrame(
+            [(s, bytes((1 << 11) * 4 * 2), 0) for s in range(64)],
+            "segment int, bits binary, n_keys long")
+    wh = str(tmp_path / "wh")
+    e1, s1 = build_engine(spark, web, wh, CFG)
+    e1.state = _LegacyFilterStore(spark, wh, meta, segments)
+    e1.run(s1, max_waves=2)
+    e2, s2 = build_engine(spark, web, wh, CFG)
+    resumed = e2.run(s2, max_waves=4, resume=True)
+    _assert_equal(resumed, oracle.crawl(web, CFG, max_waves=4))
     seen_urls = [r["url"] for r in resumed.seen().collect()]
     assert len(seen_urls) == len(set(seen_urls))  # no duplicate fetches
 
 
 def test_filter_saturation_grows_and_resume_adopts(spark, tmp_path):
-    """A deliberately-tiny bloom (m=256) saturates immediately; at the
+    """A deliberately-tiny bloom (m=32) saturates immediately; at the
     compaction wave the engine must rebuild with doubled m from the exact
     seen set, commit the grown parameters, KEEP producing oracle-equal
     results, and a resume must adopt the grown parameters instead of
     rebuilding back to the cfg defaults."""
     import dataclasses
-
-    from grawler import oracle, synthgen
-    from grawler.conf import CrawlConfig
-    from grawler.engine import build_engine
-    from grawler.store import LocalSnapshotStore
 
     cfg = dataclasses.replace(CrawlConfig(), bloom_m=32, bloom_segments=2)
     web = synthgen.generate(seed=42, n_pages=60, shape="mixed")
@@ -309,8 +279,6 @@ def test_empty_deltas_skipped_and_resume_tolerates(spark, tmp_path):
     manifest should carry a robots_cache entry — while compaction waves
     still write every table so the delta log compacts on schedule. State
     and resume must be byte-identical to the oracle regardless."""
-    from grawler.store import LocalSnapshotStore
-
     web = synthgen.generate(seed=11, n_pages=80, shape="mixed")
     wh = str(tmp_path / "wh")
     eng, seeds = build_engine(spark, web, wh, CFG)  # robots pre-seeded

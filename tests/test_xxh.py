@@ -1,5 +1,5 @@
 """grawler.xxh vs Spark's xxhash64: bit-for-bit equality so hash-dependent
-oracles (minhash banding, simhash votes, bloom/cuckoo positions) can be
+oracles (minhash banding, simhash votes, bloom positions) can be
 recomputed WITHOUT Spark."""
 
 import numpy as np
