@@ -67,8 +67,7 @@ def build_segments(
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(pdf["segment"].iloc[0])
         bits = np.zeros(m, dtype=bool)
-        for positions in pdf["pos"]:
-            bits[np.asarray(positions, dtype=np.int64)] = True
+        bits[np.concatenate(pdf["pos"].to_numpy()).astype(np.int64)] = True
         return pd.DataFrame(
             {"segment": [seg], "bits": [np.packbits(bits).tobytes()],
              "n_keys": [len(pdf)]}
@@ -84,7 +83,9 @@ def build_segments(
 def merge_segment_sets(a: DataFrame, b: DataFrame) -> DataFrame:
     """Bitwise OR of two segment sets (incremental wave updates)."""
 
-    def orjoin(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # `key` needs its type hint: without it PySpark cannot infer the
+    # grouped-map eval type and warns on every merge
+    def orjoin(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arrs = [np.frombuffer(bz, dtype=np.uint8) for bz in pdf["bits"]]
         out = arrs[0].copy()
         for x in arrs[1:]:
@@ -129,7 +130,7 @@ def make_probe_udf(segment_map: dict[int, bytes], m: int, k: int):
 
 def bloom_anti_join(
     frontier: DataFrame,
-    seen: DataFrame,
+    seen: DataFrame | None,
     segments: DataFrame | None,
     url_col: str = "url",
     m: int = DEFAULT_BITS,
@@ -141,12 +142,13 @@ def bloom_anti_join(
     """Exact frontier-minus-seen with bloom shuffle avoidance. `frontier`
     is any url-keyed frame (the engine passes a wave's new children).
 
-    segments=None falls back to the plain anti-join. `exact_join` plugs in
-    the exact check for maybe-seen rows (the engine passes
-    exactcheck.bucketed_anti_join so the seen side is never shuffled);
-    default is the plain anti-join against `seen`. `persisted` (engine's
-    per-wave cache list) caches the flagged frontier so the probe UDF runs
-    once, not once per union branch.
+    `exact_join` plugs in the exact check for maybe-seen rows (the engine
+    passes its committed-key check, exactcheck.bucketed_anti_join on the
+    bucketed layout, so the seen side is never shuffled). `seen` feeds
+    only the plain anti-join: of the maybe-seen rows when `exact_join` is
+    None, of every row when segments=None. The engine passes None.
+    `persisted` (engine's per-wave cache list) caches the flagged frontier
+    so the probe UDF runs once, not once per union branch.
     """
     if segments is None:
         return frontier.join(seen.select(url_col), url_col, "left_anti")
@@ -180,7 +182,7 @@ def bloom_anti_join(
 
 def bloom_anti_join_cogroup(
     frontier: DataFrame,
-    seen: DataFrame,
+    seen: DataFrame | None,
     segments: DataFrame,
     url_col: str = "url",
     m: int = DEFAULT_BITS,
@@ -195,6 +197,7 @@ def bloom_anti_join_cogroup(
     table, so each task holds exactly one segment's bit array (total bits /
     n_segments) against its slice of the frontier — valid at 10^10 keys
     where the 20 GB filter cannot be broadcast (docs/SCALE.md §3).
+    `seen` and `exact_join` as in bloom_anti_join.
     """
     cols = frontier.columns
     u = F.col(url_col)

@@ -196,12 +196,14 @@ class CrawlResult:
         return self.state.read("robots_cache")
 
     def host_budget(self) -> DataFrame | None:
-        deltas = self.state.read("host_budget")
-        if deltas is None:
+        """A3 per-host fetch accounting, derived from the trace (one row
+        per scheduled fetch): last crawled wave and fetch count per host."""
+        trace = self.trace()
+        if trace is None:
             return None
-        return deltas.groupBy("host").agg(
-            F.max("last_crawl_wave").alias("last_crawl_wave"),
-            F.sum("fetches").alias("fetches"),
+        return trace.groupBy("host").agg(
+            F.max("wave").alias("last_crawl_wave"),
+            F.count("*").cast("long").alias("fetches"),
         )
 
 
@@ -228,10 +230,6 @@ class CrawlEngine:
         # the sandbox; pass an IcebergSnapshotStore for the spark-submit
         # deployment (same commit_wave/read/last_wave contract)
         self.state = state_store or LocalSnapshotStore(spark, warehouse)
-        # (bucketed seen df incl _b, nb) when the backend provides the
-        # bucketed layout — refreshed by run() after every wave; None makes
-        # run_wave fall back to the plain anti-join (direct-call tests)
-        self._seen_bucketed = None
         # live bloom parameters: start at the cfg defaults, adopted from
         # committed meta on resume, m doubled in place when the filter
         # saturates (see run_wave's compaction-time check)
@@ -283,11 +281,29 @@ class CrawlEngine:
         return bloom.build_segments(urls, n_segments=int(p["segments"]),
                                     m=int(p["m"]), k=int(p["k"]))
 
+    def _unseen(self, df: DataFrame, table: str, key: str,
+                persisted: list) -> DataFrame:
+        """`df` minus the keys committed to `table` (exact; `df` unique by
+        `key`). A store with the bucketed layout gets the partition-pruned
+        probe (grawler.exactcheck), which never shuffles the table; any
+        other store (IcebergSnapshotStore) a plain anti-join."""
+        if hasattr(self.state, "read_bucketed"):
+            rb = self.state.read_bucketed(table)
+            if rb is None:
+                return df
+            return bucketed_anti_join(df, rb[0], rb[1], key,
+                                      self.cfg.seen_probe_broadcast_rows,
+                                      persisted)
+        committed = self.state.read(table)
+        if committed is None:
+            return df
+        return df.join(committed.select(key), key, "left_anti")
+
     # ----------------------------------------------------------- the wave
 
     def run_wave(
-        self, wave: int, frontier: DataFrame, seen: DataFrame,
-        robots_cache: DataFrame, bloom_segments: DataFrame | None = None,
+        self, wave: int, frontier: DataFrame, robots_cache: DataFrame,
+        bloom_segments: DataFrame | None = None,
     ) -> dict:
         cfg, spark = self.cfg, self.spark
         ts = self._wave_ts(wave)
@@ -348,10 +364,10 @@ class CrawlEngine:
             print(f"  [t] schedule+count: {_time.time() - _t0:.2f}s")
 
         # frontier is a MERGE table: per-wave commit is O(changed rows), not
-        # O(total frontier). Rows leaving this wave (seen-hits, robots-denied,
-        # scheduled) become 'remove' deltas; deferred rows stay untouched on
-        # disk; new children are 'add' deltas. At wave 0 nothing is persisted
-        # yet, so the whole next frontier is the 'add' delta.
+        # O(total frontier). Rows leaving this wave (robots-denied, scheduled)
+        # become 'remove' deltas; deferred rows stay untouched on disk; new
+        # children are 'add' deltas. At wave 0 nothing is persisted yet, so
+        # the whole next frontier is the 'add' delta.
         def _frontier_delta(adds: DataFrame) -> DataFrame:
             add_rows = adds.select(*FRONTIER_COLS).withColumn(
                 "_op", F.lit("add"))
@@ -509,20 +525,12 @@ class CrawlEngine:
         # F3/J1 — children minus seen. The bloom prefilter routes
         # definitely-unseen children around the exact check (false
         # positives are re-checked, false negatives are impossible, so the
-        # result is exact). When the store provides the bucketed seen
-        # layout, the exact check partition-prunes + broadcasts
-        # (grawler.exactcheck) instead of shuffling the seen table, and
-        # degrades to a pruned-subset shuffle above the broadcast budget.
-        exact = None
-        if self._seen_bucketed is not None:
-            _sb, _snb = self._seen_bucketed
-
-            def exact(mb, _sb=_sb, _snb=_snb):
-                return bucketed_anti_join(
-                    mb, _sb, _snb, "url",
-                    cfg.seen_probe_broadcast_rows, persisted)
-
-        if bloom_segments is not None:
+        # result is exact); only maybe-seen children take _unseen. Without
+        # segments (wave 0 of a fresh crawl) every child takes it.
+        if bloom_segments is None:
+            new_children = self._unseen(new_children, "seen", "url",
+                                        persisted)
+        else:
             p = self._filter_params
             m, k, n_seg = int(p["m"]), int(p["k"]), int(p["segments"])
             # above the broadcast budget the cogroup path holds one
@@ -530,14 +538,11 @@ class CrawlEngine:
             probe = (bloom.bloom_anti_join
                      if n_seg * (m // 8) <= cfg.bloom_broadcast_max_bytes
                      else bloom.bloom_anti_join_cogroup)
-            new_children = probe(new_children, seen, bloom_segments,
-                                 m=m, k=k, n_segments=n_seg,
-                                 exact_join=exact, persisted=persisted)
-        elif exact is not None:
-            new_children = exact(new_children)
-        else:
-            new_children = new_children.join(
-                seen.select("url"), "url", "left_anti")
+            new_children = probe(
+                new_children, None, bloom_segments, m=m, k=k,
+                n_segments=n_seg, persisted=persisted,
+                exact_join=lambda mb: self._unseen(mb, "seen", "url",
+                                                   persisted))
         frontier_adds = (
             new_children if wave > 0
             else deferred.unionByName(new_children)
@@ -571,19 +576,8 @@ class CrawlEngine:
         # images are not re-decoded, the store_keys side is partition-
         # pruned instead of shuffled, and compaction keeps its file count
         # bounded — wave cost is O(new keys), independent of store size.
-        rb = (self.state.read_bucketed("store_keys")
-              if hasattr(self.state, "read_bucketed") else None)
-        if rb is not None:
-            img_new = bucketed_anti_join(
-                img_first, rb[0], rb[1], "image_id",
-                cfg.seen_probe_broadcast_rows, persisted)
-        else:
-            existing_keys = self.state.read("store_keys")
-            img_new = (
-                img_first.join(existing_keys.select("image_id"),
-                               "image_id", "left_anti")
-                if existing_keys is not None else img_first
-            )
+        img_new = self._unseen(img_first, "store_keys", "image_id",
+                               persisted)
         store_delta = (
             img_new.join(self.images, "image_id", "inner")
             .withColumn("ph", decode_phash_udf(F.col("bytes"), F.col("fmt")))
@@ -659,13 +653,6 @@ class CrawlEngine:
             schemas.METRICS,
         )
 
-        # A3: per-host fetch accounting (append delta; read-side aggregates
-        # max(last_crawl_wave), sum(fetches) per host)
-        host_budget = scheduled.groupBy("host").agg(
-            F.lit(wave).alias("last_crawl_wave"),
-            F.count("*").cast("long").alias("fetches"),
-        )
-
         # 10. wave-atomic commit (lineage manifest last)
         tables = {
             "trace": trace,
@@ -675,7 +662,6 @@ class CrawlEngine:
             "frontier": _frontier_delta(frontier_adds),
             "robots_cache": robots_delta,
             "metrics": metrics,
-            "host_budget": host_budget,
             "pages_meta": pages_meta,
         }
         compacting = (wave > 0 and hasattr(self.state, "compact_every")
@@ -708,8 +694,11 @@ class CrawlEngine:
             # doubled m, and commit the grown parameters as state so probes
             # and resumes decode the new bytes correctly.
             self._filter_params = dict(self._filter_params, m=2 * m)
-            tables["bloom"] = self._build_segments(
-                seen.select("url").unionByName(seen_delta.select("url")))
+            urls = seen_delta.select("url")
+            prior = self.state.read("seen")
+            if prior is not None:
+                urls = prior.select("url").unionByName(urls)
+            tables["bloom"] = self._build_segments(urls)
         elif bloom_segments is None:
             tables["bloom"] = self._build_segments(seen_delta)
         elif compacting or n_parsed > 0:
@@ -755,12 +744,6 @@ class CrawlEngine:
             frontier = self.state.read("frontier")
             if frontier is None:
                 frontier = spark.createDataFrame([], schemas.FRONTIER)
-            seen = self.state.read("seen")
-            seen = (seen.select("url") if seen is not None
-                    else spark.createDataFrame([], "url string"))
-            self._seen_bucketed = (
-                self.state.read_bucketed("seen")
-                if hasattr(self.state, "read_bucketed") else None)
             robots_cache = self.state.read("robots_cache")
             if robots_cache is None:
                 robots_cache = spark.createDataFrame([], schemas.ROBOTS)
@@ -770,19 +753,21 @@ class CrawlEngine:
             # other warehouse (no filter, or another filter family) gets
             # its segments rebuilt from the exact seen set — decoding
             # foreign bytes, or a filter missing the pre-resume seen URLs,
-            # would declare seen children 'definitely new'.
+            # would declare seen children 'definitely new'. With nothing
+            # seen yet there is nothing to rebuild: the wave then builds
+            # the segments from its own seen delta, as wave 0 does.
             bloom_segments = self.state.read("bloom")
             recorded = self.state.read_meta().get("seen_filter") or {}
             if (bloom_segments is not None
                     and recorded.get("family") == "bloom"):
                 self._filter_params = recorded
             else:
-                bloom_segments = self._build_segments(seen)
+                seen = self.state.read("seen")
+                bloom_segments = (None if seen is None
+                                  else self._build_segments(seen))
         else:
             start = 0
             frontier = self._seed_frontier(seeds)
-            seen = spark.createDataFrame([], "url string")
-            self._seen_bucketed = None
             robots_cache = (
                 self.robots_cache_init
                 if self.robots_cache_init is not None
@@ -794,8 +779,7 @@ class CrawlEngine:
             if frontier.isEmpty():
                 break
             _w0 = _time.time()
-            m = self.run_wave(wave, frontier, seen, robots_cache,
-                              bloom_segments)
+            m = self.run_wave(wave, frontier, robots_cache, bloom_segments)
             if m["n_scheduled"] == 0:
                 # oracle parity: an all-blocked wave is not counted
                 break
@@ -803,14 +787,6 @@ class CrawlEngine:
                 on_wave(wave, m, _time.time() - _w0)
             waves = wave + 1
             frontier = self.state.read("frontier")
-            # every committed seen delta so far can be empty (all fetches
-            # errored) — read() then returns None; same guard as resume
-            seen = self.state.read("seen")
-            seen = (seen.select("url") if seen is not None
-                    else spark.createDataFrame([], "url string"))
-            self._seen_bucketed = (
-                self.state.read_bucketed("seen")
-                if hasattr(self.state, "read_bucketed") else None)
             robots_cache = self.state.read("robots_cache")
             bloom_segments = self.state.read("bloom")
         return CrawlResult(waves=waves, state=self.state)

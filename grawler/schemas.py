@@ -43,12 +43,6 @@ SEEN = _s(
     ("first_wave", IntegerType()),
 )
 
-HOST_BUDGET = _s(
-    ("host", StringType()),
-    ("last_crawl_wave", IntegerType()),
-    ("fetches", LongType()),
-)
-
 ROBOTS = _s(
     ("host", StringType()),
     ("robots_txt", StringType()),

@@ -50,7 +50,7 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-APPEND_TABLES = ("store", "trace", "metrics", "host_budget", "pages_meta")
+APPEND_TABLES = ("store", "trace", "metrics", "pages_meta")
 MERGE_TABLES = {"frontier": "url", "robots_cache": "host"}  # table -> key
 FULL_TABLES = ("bloom",)
 # key tables that every wave PROBES (exact seen check, store dedup): written

@@ -2,16 +2,18 @@
 
 Packaging (north_rule: spark-submit --py-files on a multi-executor cluster):
 
-    cd /root/repo && zip -r grawler.zip grawler
+    zip -r grawler.zip grawler          # from the repository root
     spark-submit --master <cluster> --py-files grawler.zip \\
-        --conf spark.sql.catalog.crawl=org.apache.iceberg.spark.SparkCatalog \\
-        --conf spark.sql.catalog.crawl.type=hadoop \\
-        --conf spark.sql.catalog.crawl.warehouse=/path/wh \\
         jobs/crawl.py --warehouse /path/state --waves 10 \\
         --pages /path/pages --robots /path/robots --images /path/images \\
         --seeds /path/seeds.json
 
-In this sandbox (no Iceberg jar, no network) the same job runs against the
+Crawl state lives in the engine's default LocalSnapshotStore under
+--warehouse (Parquet tables plus JSON lineage manifests; --resume continues
+from the last committed wave). The job does not use IcebergSnapshotStore;
+its SQL is shown by tools/gen_iceberg_log.py (docs/ICEBERG_STATEMENTS.md).
+
+With no pages/robots corpus at hand the same job runs against the
 deterministic synthetic web: pass --synthetic N to generate it in-process.
 """
 
@@ -42,20 +44,6 @@ def main():
                     help="fetch pages and robots.txt via real batched HTTP "
                          "(grawler.fetch.HttpFetcher) instead of the "
                          "fetch-sim join against --pages/--robots")
-    ap.add_argument("--bucket-target-rows", type=int, default=1 << 20,
-                    help="target rows per bucket for the bucketed "
-                         "seen/store_keys layout; compaction grows the "
-                         "bucket count to hold this (probe-cost bound)")
-    ap.add_argument("--initial-buckets", type=int, default=64,
-                    help="bucket count for the seen/store_keys layout "
-                         "before the first compaction")
-    ap.add_argument("--compact-every", type=int, default=8,
-                    help="compaction period in waves (merge + bucketed "
-                         "tables)")
-    ap.add_argument("--probe-broadcast-rows", type=int, default=1 << 20,
-                    help="max probe rows for the zero-shuffle broadcast "
-                         "exact check; larger probes use the "
-                         "pruned-subset shuffle join")
     args = ap.parse_args()
 
     from pyspark import SparkConf
@@ -72,15 +60,7 @@ def main():
         from grawler.session import get_spark
 
         spark = get_spark("grawler-crawl")
-    cfg = CrawlConfig(seen_probe_broadcast_rows=args.probe_broadcast_rows)
-
-    def _store(warehouse):
-        from grawler.store import LocalSnapshotStore
-
-        return LocalSnapshotStore(
-            spark, warehouse, compact_every=args.compact_every,
-            initial_buckets=args.initial_buckets,
-            bucket_target_rows=args.bucket_target_rows)
+    cfg = CrawlConfig()
 
     if args.synthetic:
         from grawler import synthgen
@@ -88,7 +68,6 @@ def main():
         web = synthgen.generate(seed=args.seed, n_pages=args.synthetic,
                                 shape=args.shape)
         eng, seeds = build_engine(spark, web, args.warehouse, cfg)
-        eng.state = _store(args.warehouse)
     else:
         fetcher = None
         if args.http:
@@ -103,8 +82,7 @@ def main():
         images = spark.read.parquet(args.images)
         seeds = spark.read.json(args.seeds).select("url")
         eng = CrawlEngine(spark, pages, robots, images, args.warehouse, cfg,
-                          robots_cache_init=robots, fetcher=fetcher,
-                          state_store=_store(args.warehouse))
+                          robots_cache_init=robots, fetcher=fetcher)
 
     res = eng.run(seeds, max_waves=args.waves, resume=args.resume)
     n_seen = res.seen().count() if res.seen() is not None else 0

@@ -116,3 +116,49 @@ def test_broadcast_probe_or_unions_multirow_segments(spark):
                   frontier.join(seen, "url", "left_anti").collect())
     assert got == want
     assert len(got) == 200
+
+
+def test_merge_infers_eval_type_without_warning(spark):
+    """The grouped-map merge is fully type-hinted, so PySpark infers its
+    eval type instead of warning once per merge (that is, per wave)."""
+    import warnings
+
+    a = bloom.build_segments(_urls(spark, "a", 50), m=1 << 10)
+    b = bloom.build_segments(_urls(spark, "b", 50), m=1 << 10)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        merged = bloom.merge_segment_sets(a, b)
+    assert not [w for w in caught
+                if "Cannot infer the eval type" in str(w.message)]
+    assert merged.count() > 0
+
+
+def test_segment_bits_match_xxhash_replica(spark):
+    """Pins the committed segment format that resume decodes: segment =
+    pmod(xxhash64(url), S), bit i of the url = pmod(xxhash64(url, i), m),
+    packed MSB-first (np.packbits), n_keys = urls in the segment. The
+    expected bytes come from the pure-Python xxhash64 replica, not Spark."""
+    from collections import Counter
+
+    import numpy as np
+
+    from grawler.xxh import spark_xxhash64
+
+    urls = [f"http://h{i % 9}.example/p/{i}?q={i * 7}" for i in range(200)]
+    n_seg, m, k = 4, 1 << 10, 4
+    got = {
+        r["segment"]: (bytes(r["bits"]), r["n_keys"])
+        for r in bloom.build_segments(
+            spark.createDataFrame([(u,) for u in urls], "url string"),
+            n_segments=n_seg, m=m, k=k).collect()
+    }
+    bits: dict[int, bytearray] = {}
+    n_keys: Counter = Counter()
+    for u in urls:
+        seg = spark_xxhash64(u) % n_seg  # python % is pmod (positive modulus)
+        buf = bits.setdefault(seg, bytearray(m // 8))
+        for i in range(k):
+            p = spark_xxhash64(u, np.int32(i)) % m
+            buf[p // 8] |= 0x80 >> (p % 8)
+        n_keys[seg] += 1
+    assert got == {s: (bytes(b), n_keys[s]) for s, b in bits.items()}

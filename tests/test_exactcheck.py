@@ -90,3 +90,40 @@ def test_broadcast_path_plan_has_no_shuffle(spark, tmp_path):
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("BroadcastHashJoin") == 2
+
+
+class _ReadOnlyStore:
+    """A store without the bucketed layout (the IcebergSnapshotStore
+    surface the engine's exact check sees: `read` only)."""
+
+    def __init__(self, store):
+        self._store = store
+
+    def read(self, table, upto_wave=None):
+        return self._store.read(table, upto_wave)
+
+
+def test_engine_unseen_on_every_store_path(spark, tmp_path):
+    """CrawlEngine._unseen removes exactly the committed keys: through the
+    bucketed probe, through the plain anti-join of a store without
+    read_bucketed, and as the identity when nothing is committed."""
+    from grawler import schemas
+    from grawler.engine import CrawlEngine
+
+    empty = spark.createDataFrame([], schemas.PAGES)
+    eng = CrawlEngine(spark, empty, spark.createDataFrame([], schemas.ROBOTS),
+                      spark.createDataFrame([], schemas.IMAGES),
+                      str(tmp_path / "wh"))
+    probe = spark.createDataFrame(
+        [(f"http://x.example/{i}",) for i in range(40, 60)], "url string")
+    for state in (eng.state, _ReadOnlyStore(eng.state)):
+        eng.state = state
+        assert eng._unseen(probe, "seen", "url", []) is probe
+    local = eng.state._store
+    local.commit_wave(0, {"seen": spark.createDataFrame(
+        [(f"http://x.example/{i}",) for i in range(50)], "url string")})
+    want = [f"http://x.example/{i}" for i in range(50, 60)]
+    for state in (local, _ReadOnlyStore(local)):
+        eng.state = state
+        got = eng._unseen(probe, "seen", "url", [])
+        assert sorted(r["url"] for r in got.collect()) == sorted(want)
