@@ -28,7 +28,6 @@ the pure-Python oracle (grawler.oracle) is the correctness contract.
 from __future__ import annotations
 
 import datetime as dt
-import os as _os
 import time as _time
 from dataclasses import dataclass
 
@@ -354,14 +353,10 @@ class CrawlEngine:
             salt_buckets=cfg.salt_buckets,
             registry=persisted,
         )
-        _timing = _os.environ.get("GRAWLER_TIMING")
-        _t0 = _time.time()
         scheduled = scheduled.persist()
         deferred = deferred.persist()
         persisted.extend([scheduled, deferred])
         n_scheduled = scheduled.count()
-        if _timing:
-            print(f"  [t] schedule+count: {_time.time() - _t0:.2f}s")
 
         # frontier is a MERGE table: per-wave commit is O(changed rows), not
         # O(total frontier). Rows leaving this wave (robots-denied, scheduled)
@@ -453,16 +448,9 @@ class CrawlEngine:
         # would otherwise each recompute the fetch join + parse UDF while
         # the cache is still being populated (measured 4x redundant parse
         # at 100k urls/wave). One pass here fills fetched+parsed caches.
-        _t0 = _time.time()
         n_parsed = parsed.count()
-        if _timing:
-            print(f"  [t] fetch+parse count: {_time.time() - _t0:.2f}s")
 
-        seen_delta = parsed.select(
-            "url",
-            F.xxhash64("url").alias("url_hash"),
-            F.lit(wave).alias("first_wave"),
-        )
+        seen_delta = parsed.select("url", F.lit(wave).alias("first_wave"))
         # F8/K1 document-shape parity: the reference persists
         # (Url, ParentUrl, MetaData, Response, Timestamp) per page
         # (src/db/db.go:46-69); the engine keeps the extracted metadata in
@@ -626,7 +614,6 @@ class CrawlEngine:
 
         from concurrent.futures import ThreadPoolExecutor
 
-        _t0 = _time.time()
         with ThreadPoolExecutor(max_workers=3) as _pool:
             _f_stored = _pool.submit(store_delta.count)
             _f_parts = _pool.submit(_part_rows)
@@ -635,9 +622,6 @@ class CrawlEngine:
             n_stored = _f_stored.result()
             part_rows = _f_parts.result()
             n_img_refs = _f_imgs.result()
-        if _timing:
-            print(f"  [t] store/metrics/img counts (parallel): "
-                  f"{_time.time() - _t0:.2f}s")
         n_fetched = sum(r["fetched"] for r in part_rows)
         n_errors = n_scheduled - n_fetched
         n_deduped = n_img_refs - n_stored
@@ -664,17 +648,15 @@ class CrawlEngine:
             "metrics": metrics,
             "pages_meta": pages_meta,
         }
-        compacting = (wave > 0 and hasattr(self.state, "compact_every")
-                      and wave % self.state.compact_every == 0)
         # O(delta) commits extend to ZERO-size deltas: a table whose wave
         # delta is known empty from counts already on hand is omitted from
         # the commit entirely (readers union the manifest entries that
         # exist; on a steady 10^10-URL crawl the robots cache changes on
         # almost no wave, so this retires a full table write + Iceberg
-        # MERGE per wave). Compaction waves still write every table so the
-        # delta log compacts on schedule, and wave 0 always writes — it
+        # MERGE per wave). The store still folds an omitted merge or
+        # bucketed table at its compaction waves. Wave 0 always writes — it
         # establishes each table's schema on disk.
-        if wave > 0 and not compacting:
+        if wave > 0:
             if n_stored == 0:
                 del tables["store"], tables["store_keys"]
             if n_parsed == 0:
@@ -683,8 +665,12 @@ class CrawlEngine:
                 # emptiness probe costs one first-partition task, the
                 # skipped write costs a full (if empty) table job
                 del tables["robots_cache"]
+        # bloom is a full table: a new snapshot only when the filter
+        # changes (first build, new seen URLs, or a saturation rebuild)
         m = int(self._filter_params["m"])
-        if (compacting and bloom_segments is not None
+        if bloom_segments is None:
+            tables["bloom"] = self._build_segments(seen_delta)
+        elif (self.state.compacts(wave)
                 and bloom.fill_fraction(bloom_segments, m)
                 > cfg.filter_max_load):
             # saturation check (amortized like nb growth): a static filter
@@ -699,11 +685,7 @@ class CrawlEngine:
             if prior is not None:
                 urls = prior.select("url").unionByName(urls)
             tables["bloom"] = self._build_segments(urls)
-        elif bloom_segments is None:
-            tables["bloom"] = self._build_segments(seen_delta)
-        elif compacting or n_parsed > 0:
-            # (an empty seen delta makes the merge the identity: the
-            # previous snapshot stays instead of identical segment bytes)
+        elif n_parsed > 0:
             tables["bloom"] = bloom.merge_segment_sets(
                 bloom_segments, self._build_segments(seen_delta))
         manifest = self.state.commit_wave(

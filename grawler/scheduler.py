@@ -36,7 +36,8 @@ def per_host_topk(
     k: int,
     salt_buckets: int = 16,
     rank_col: str = "hrank",
-    registry: list | None = None,
+    *,
+    registry: list,
 ) -> tuple[DataFrame, DataFrame]:
     """Per-host politeness: returns (kept, deferred_overflow).
 
@@ -46,12 +47,13 @@ def per_host_topk(
     regardless of skew) take the exact per-host window, whose overflow also
     defers. kept carries rank_col (1-based, <= k).
 
-    When `registry` is given, the two window OUTPUTS (tagged, ranked) are
-    persisted into it: both the kept and the deferred branch read each
-    window's result, and without the cache the engine's commit-time
-    consumers of `deferred` re-executed the entire schedule pipeline
-    (canonicalize + both window shuffles) from scratch inside the frontier
-    table write — measured ~5s of the ~7s frontier commit at a 100k wave.
+    The two window OUTPUTS (tagged, ranked) are persisted into `registry`,
+    which the caller unpersists once the wave has materialized: both the
+    kept and the deferred branch read each window's result, and without
+    the cache the engine's commit-time consumers of `deferred` re-executed
+    the entire schedule pipeline (canonicalize + both window shuffles) from
+    scratch inside the frontier table write — measured ~5s of the ~7s
+    frontier commit at a 100k wave.
     """
     cols = df.columns
     order = [F.col(c) for c in POLITE_ORDER]
@@ -60,20 +62,17 @@ def per_host_topk(
             "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
         )
         w_local = Window.partitionBy("host", "_salt").orderBy(*order)
-        tagged = salted.withColumn("_lr", F.row_number().over(w_local))
-        if registry is not None:
-            tagged = tagged.persist()
-            registry.append(tagged)
+        tagged = (salted.withColumn("_lr", F.row_number().over(w_local))
+                  .persist())
+        registry.append(tagged)
         survivors = tagged.where(F.col("_lr") <= k).drop("_lr", "_salt")
         defer_local = tagged.where(F.col("_lr") > k).select(*cols)
     else:
         survivors = df
         defer_local = df.limit(0)
     w = Window.partitionBy("host").orderBy(*order)
-    ranked = survivors.withColumn(rank_col, F.row_number().over(w))
-    if registry is not None:
-        ranked = ranked.persist()
-        registry.append(ranked)
+    ranked = survivors.withColumn(rank_col, F.row_number().over(w)).persist()
+    registry.append(ranked)
     kept = ranked.where(F.col(rank_col) <= k)
     defer_exact = ranked.where(F.col(rank_col) > k).select(*cols)
     return kept, defer_local.unionByName(defer_exact)
@@ -81,7 +80,8 @@ def per_host_topk(
 
 def global_sequence(
     df: DataFrame, order_cols=WAVE_ORDER, seq_col: str = "seq",
-    registry: list | None = None,
+    *,
+    registry: list,
 ) -> DataFrame:
     """Deterministic 0-based global sequence in sort order, without a
     single-partition window.
@@ -103,8 +103,7 @@ def global_sequence(
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    if registry is not None:
-        registry.append(d)  # caller unpersists after the wave materializes
+    registry.append(d)  # caller unpersists after the wave materializes
     counts = {r["_pid"]: r["cnt"] for r in
               d.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = {}, 0
@@ -126,23 +125,22 @@ def schedule_wave(
     host_tokens: int,
     wave_cap: int,
     salt_buckets: int = 16,
-    registry: list | None = None,
+    *,
+    registry: list,
 ):
     """Politeness + wave cap. Returns (scheduled_with_seq, deferred).
 
-    deferred keeps the original frontier columns and stays pending.
+    deferred keeps the original frontier columns and stays pending. Every
+    DataFrame persisted on the way is appended to `registry`, which the
+    caller unpersists.
     """
     cols = frontier.columns
     kept, deferred_polite = per_host_topk(
         frontier, host_tokens, salt_buckets=salt_buckets, registry=registry)
     # global_sequence reads its input twice (range-bound sampling + the
-    # partitioning pass): when per_host_topk cached `ranked` (registry
-    # path) both reads are a cheap cache-scan + filter; otherwise persist
-    # here so the window pipeline doesn't rerun.
+    # partitioning pass): per_host_topk cached `ranked`, so both reads are
+    # a cheap cache-scan + filter and the window pipeline doesn't rerun.
     polite = kept.drop("hrank").select(*cols)
-    if registry is None:
-        polite = polite.persist()
-
     seq = global_sequence(polite, WAVE_ORDER, "seq", registry=registry)
     scheduled = seq.where(F.col("seq") < wave_cap)
     over_cap = seq.where(F.col("seq") >= wave_cap).select(*cols)

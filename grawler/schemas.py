@@ -39,7 +39,6 @@ FRONTIER = _s(
 
 SEEN = _s(
     ("url", StringType()),
-    ("url_hash", LongType()),
     ("first_wave", IntegerType()),
 )
 

@@ -21,6 +21,15 @@ point: a job killed mid-wave leaves orphan files but no manifest, so resume
 re-runs that wave deterministically — no duplicate fetches survive into
 state (north_rule: resumable with per-partition lineage + metrics).
 
+LocalSnapshotStore reads its `_lineage/` manifests once, when it is opened,
+and adds each manifest it commits; every read selects its entries from that
+log. One store object writes a warehouse: another object opened on the same
+path sees those commits only when it is opened after them. Compaction is the
+store's own rule (`compacts(wave)`, every `compact_every` waves): such a wave
+folds every merge and bucketed table that has committed rows into one
+snapshot, whether or not the wave passed a delta for it, so callers may omit
+any table whose delta is empty.
+
 Table modes:
   append   — per-wave delta dirs (store, trace, metrics): O(delta) write.
   bucketed — per-wave delta dirs hash-partitioned by
@@ -38,7 +47,8 @@ Table modes:
              the wave commit cost is O(changed rows), not O(total frontier).
              The Iceberg deployment expresses the same deltas as
              MERGE INTO / DELETE.
-  full     — per-wave full snapshot (bloom only: bounded segment set).
+  full     — per-wave full snapshot (bloom only: bounded segment set);
+             reads take the latest, and no compaction touches it.
 """
 
 from __future__ import annotations
@@ -105,8 +115,20 @@ class LocalSnapshotStore:
         # entries a read unions share one consistent nb.
         self.initial_buckets = max(1, initial_buckets)
         self.bucket_target_rows = max(1, bucket_target_rows)
-        self._nb_cache: dict[str, int] = {}
-        os.makedirs(os.path.join(path, "_lineage"), exist_ok=True)
+        # the committed manifests in wave order: read from disk once here,
+        # then kept in step with it by commit_wave
+        d = os.path.join(path, "_lineage")
+        os.makedirs(d, exist_ok=True)
+        self._log: list[dict] = []
+        for fn in sorted(os.listdir(d)):
+            if fn.startswith("wave-") and fn.endswith(".json"):
+                with open(os.path.join(d, fn)) as f:
+                    self._log.append(json.load(f))
+
+    def compacts(self, wave: int) -> bool:
+        """Whether `wave` folds the merge and bucketed tables' delta logs
+        into one snapshot each."""
+        return wave > 0 and wave % self.compact_every == 0
 
     # ------------------------------------------------------------- commit
 
@@ -127,28 +149,28 @@ class LocalSnapshotStore:
             .drop(OP_COL, WV_COL, "_opr", "_rn")
         )
 
-    def _merge_entries(self, table: str, upto_wave: int | None = None):
-        ms = self.manifests()
-        if upto_wave is not None:
-            ms = [m for m in ms if m["wave"] <= upto_wave]
-        entries = [m["tables"][table] for m in ms if table in m["tables"]]
-        # reads start at the latest compacted snapshot
-        start = 0
-        for i, e in enumerate(entries):
-            if e["mode"] == "compact":
-                start = i
-        return entries[start:]
+    def _entries(self, table: str, upto_wave: int | None = None) -> list[dict]:
+        """The manifest entries a read of `table` unions: every entry of an
+        append table, the last of a full table, and for merge and bucketed
+        tables the latest compacted snapshot and every delta after it."""
+        entries = [m["tables"][table] for m in self._log
+                   if table in m["tables"]
+                   and (upto_wave is None or m["wave"] <= upto_wave)]
+        if table in FULL_TABLES:
+            return entries[-1:]
+        if table in MERGE_TABLES or table in BUCKETED_TABLES:
+            start = max((i for i, e in enumerate(entries)
+                         if e["mode"] == "compact"), default=0)
+            return entries[start:]
+        return entries
 
     def _current_nb(self, table: str) -> int:
         """Bucket count in force for `table` (latest committed entry wins;
         nb only changes at compaction, which rewrites all rows)."""
-        if table in self._nb_cache:
-            return self._nb_cache[table]
-        for m in reversed(self.manifests()):
-            e = m.get("tables", {}).get(table)
+        for m in reversed(self._log):
+            e = m["tables"].get(table)
             if e and "nb" in e:
-                self._nb_cache[table] = int(e["nb"])
-                return self._nb_cache[table]
+                return int(e["nb"])
         return self.initial_buckets
 
     def _with_bucket(self, df: DataFrame, key: str, nb: int) -> DataFrame:
@@ -156,85 +178,75 @@ class LocalSnapshotStore:
             BUCKET_COL,
             F.pmod(F.xxhash64(F.col(key)), F.lit(nb)).cast("int"))
 
+    def _fold(self, table: str, wave: int,
+              delta: DataFrame | None) -> DataFrame:
+        """Compaction: `delta` (None when the wave passed none) and the
+        non-empty entries a read of `table` unions, as one snapshot —
+        first row per key for a bucketed table, the resolved adds of a
+        merge table."""
+        parts = [] if delta is None else [delta]
+        parts += [self.spark.read.parquet(e["path"]).drop(BUCKET_COL)
+                  for e in self._entries(table, upto_wave=wave - 1)
+                  if e["files"]]  # an empty delta is a _SUCCESS-only dir
+        out = parts[0]
+        for d in parts[1:]:
+            out = out.unionByName(d, allowMissingColumns=True)
+        if table in BUCKETED_TABLES:
+            return _dedup_keep_first(out, BUCKETED_TABLES[table])
+        return (self._resolve(out, MERGE_TABLES[table])
+                .withColumn(OP_COL, F.lit("add"))
+                .withColumn(WV_COL, F.lit(wave)))
+
     def commit_wave(self, wave: int, tables: dict[str, DataFrame],
                     meta: dict | None = None) -> dict:
         """Write all table data, then the lineage manifest (commit point).
         `meta` (e.g. the seen-filter family + parameters) rides in the
-        manifest so resume can validate configuration compatibility."""
-        timing = os.environ.get("GRAWLER_TIMING")
-        entries = {}
+        manifest so resume can validate configuration compatibility. A
+        compaction wave also folds each merge and bucketed table that has
+        committed rows but no delta in `tables`."""
+        tables = dict(tables)
+        compacting = self.compacts(wave)
+        if compacting:
+            for name in (*MERGE_TABLES, *BUCKETED_TABLES):
+                if name not in tables and any(
+                        e["files"] for e in self._entries(name, wave - 1)):
+                    tables[name] = None
 
         def write_one(item):
             name, df = item
             p = self._table_path(name, wave)
-            t0 = time.time()
             extra = {}
+            if name in MERGE_TABLES and df is not None:
+                df = df.withColumn(WV_COL, F.lit(wave))
+            if name in MERGE_TABLES or name in BUCKETED_TABLES:
+                if compacting:
+                    df, mode = self._fold(name, wave, df), "compact"
+                else:
+                    mode = "merge" if name in MERGE_TABLES else "bucketed"
+            else:
+                mode = "append" if name in APPEND_TABLES else "full"
             if name in BUCKETED_TABLES:
                 key = BUCKETED_TABLES[name]
                 nb = self._current_nb(name)
-                do_compact = wave > 0 and wave % self.compact_every == 0
-                if do_compact:
-                    prior = self._merge_entries(name, upto_wave=wave - 1)
-                    out = df
-                    for e in prior:
-                        if not e.get("files"):
-                            continue  # empty delta: _SUCCESS-only dir
-                        out = out.unionByName(
-                            self.spark.read.parquet(e["path"])
-                            .drop(BUCKET_COL),
-                            allowMissingColumns=True)
-                    out = _dedup_keep_first(out, key)
+                if mode == "compact":
                     # adaptive nb: bucket size stays <= bucket_target_rows,
                     # so the per-wave probe cost (O(probe-keys x bucket
                     # size)) is flat while the table grows. Grow-only to
                     # avoid churn; always a power of two so bucket ids nest.
-                    n = out.count()
                     nb = max(nb, _next_pow2(
-                        -(-n // self.bucket_target_rows)))
-                    mode = "compact"
-                else:
-                    out = df
-                    mode = "bucketed"
+                        -(-df.count() // self.bucket_target_rows)))
                 # sorted within each bucket file: parquet row-group min/max
                 # stats on the key then let point probes skip row groups
                 # inside a bucket (the LSM-style second pruning level under
                 # the _b directory pruning)
-                (self._with_bucket(out, key, nb)
+                (self._with_bucket(df, key, nb)
                  .repartition(nb, F.col(BUCKET_COL))
                  .sortWithinPartitions(BUCKET_COL, key)
                  .write.mode("overwrite")
                  .partitionBy(BUCKET_COL).parquet(p))
-                self._nb_cache[name] = nb
                 extra["nb"] = nb
-            elif name in MERGE_TABLES:
-                key = MERGE_TABLES[name]
-                delta = df.withColumn(WV_COL, F.lit(wave))
-                do_compact = wave > 0 and wave % self.compact_every == 0
-                if do_compact:
-                    prior = self._merge_entries(name, upto_wave=wave - 1)
-                    parts = [delta]
-                    if prior:
-                        parts.append(
-                            self.spark.read.parquet(
-                                *[e["path"] for e in prior]))
-                    union = parts[0]
-                    for d in parts[1:]:
-                        union = union.unionByName(d)
-                    out = (
-                        self._resolve(union, key)
-                        .withColumn(OP_COL, F.lit("add"))
-                        .withColumn(WV_COL, F.lit(wave))
-                    )
-                    mode = "compact"
-                else:
-                    out = delta
-                    mode = "merge"
-                out.write.mode("overwrite").parquet(p)
             else:
-                mode = "append" if name in APPEND_TABLES else "full"
                 df.write.mode("overwrite").parquet(p)
-            if timing:
-                print(f"  [t] write {name}: {time.time() - t0:.2f}s")
             # per-partition lineage (north_rule): the manifest names every
             # partition file each wave produced, so any wave's output can be
             # audited / replayed at file granularity (Iceberg gets this from
@@ -261,12 +273,8 @@ class LocalSnapshotStore:
             key=lambda kv: {"frontier": 0, "store": 1, "bloom": 2}.get(
                 kv[0], 9),
         )
-        t_pool = time.time()
         with ThreadPoolExecutor(max_workers=10) as pool:
-            for name, entry in pool.map(write_one, order):
-                entries[name] = entry
-        if timing:
-            print(f"  [t] commit pool total: {time.time() - t_pool:.2f}s")
+            entries = dict(pool.map(write_one, order))
         manifest = {
             "wave": wave,
             "tables": entries,
@@ -274,31 +282,31 @@ class LocalSnapshotStore:
         }
         if meta:
             manifest["meta"] = meta
+        text = json.dumps(manifest, indent=1)
         tmp = os.path.join(self.path, "_lineage", f".wave-{wave:05d}.tmp")
         final = os.path.join(self.path, "_lineage", f"wave-{wave:05d}.json")
         with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
+            f.write(text)
         os.replace(tmp, final)  # atomic rename = the commit
+        # the rename replaced any earlier manifest of this wave: so does the
+        # log, which keeps the parsed text, as a fresh reader would
+        self._log = sorted(
+            [m for m in self._log if m["wave"] != wave] + [json.loads(text)],
+            key=lambda m: m["wave"])
         return manifest
 
     # ------------------------------------------------------------- read
 
     def manifests(self) -> list[dict]:
-        d = os.path.join(self.path, "_lineage")
-        out = []
-        for fn in sorted(os.listdir(d)):
-            if fn.startswith("wave-") and fn.endswith(".json"):
-                with open(os.path.join(d, fn)) as f:
-                    out.append(json.load(f))
-        return out
+        """The committed manifests in wave order (a copy of the log)."""
+        return list(self._log)
 
     def last_wave(self) -> int | None:
-        ms = self.manifests()
-        return ms[-1]["wave"] if ms else None
+        return self._log[-1]["wave"] if self._log else None
 
     def read_meta(self) -> dict:
         """Latest committed meta dict ({} if none recorded)."""
-        for m in reversed(self.manifests()):
+        for m in reversed(self._log):
             if m.get("meta"):
                 return m["meta"]
         return {}
@@ -309,8 +317,8 @@ class LocalSnapshotStore:
         """(df including the `_b` partition column, nb) for a bucketed key
         table — compacted snapshot + later deltas, all written under ONE nb
         (the invariant the pruned probe depends on; asserted here)."""
-        entries = [e for e in self._merge_entries(table, upto_wave)
-                   if e.get("files")]  # skip _SUCCESS-only empty deltas
+        entries = [e for e in self._entries(table, upto_wave)
+                   if e["files"]]  # skip _SUCCESS-only empty deltas
         if not entries:
             return None
         nbs = {int(e["nb"]) for e in entries}
@@ -331,23 +339,13 @@ class LocalSnapshotStore:
         if table in BUCKETED_TABLES:
             r = self.read_bucketed(table, upto_wave)
             return None if r is None else r[0].drop(BUCKET_COL)
-        if table in MERGE_TABLES:
-            entries = self._merge_entries(table, upto_wave)
-            if not entries:
-                return None
-            df = self.spark.read.parquet(*[e["path"] for e in entries])
-            return self._resolve(df, MERGE_TABLES[table])
-        ms = self.manifests()
-        if upto_wave is not None:
-            ms = [m for m in ms if m["wave"] <= upto_wave]
-        paths = [
-            m["tables"][table]["path"] for m in ms if table in m["tables"]
-        ]
-        if not paths:
+        entries = self._entries(table, upto_wave)
+        if not entries:
             return None
-        if table in FULL_TABLES:
-            paths = paths[-1:]
-        return self.spark.read.parquet(*paths)
+        df = self.spark.read.parquet(*[e["path"] for e in entries])
+        if table in MERGE_TABLES:
+            return self._resolve(df, MERGE_TABLES[table])
+        return df
 
 
 class IcebergSnapshotStore:
@@ -579,6 +577,11 @@ class IcebergSnapshotStore:
             + [(wave, "_wave", "", "commit")]
         )
         return {"wave": wave, "tables": entries}
+
+    def compacts(self, wave: int) -> bool:
+        """Always False: commit_wave never compacts here. The maintenance
+        SQL (rewrite_data_files_sql, replace_bucket_sql) runs outside it."""
+        return False
 
     def last_wave(self) -> int | None:
         rows = self.spark.sql(

@@ -275,10 +275,11 @@ def test_filter_saturation_grows_and_resume_adopts(spark, tmp_path):
 def test_empty_deltas_skipped_and_resume_tolerates(spark, tmp_path):
     """A table whose wave delta is known empty is omitted from the commit
     (O(delta) extends to zero-size deltas): with every host's robots.txt
-    pre-seeded and fresh, no wave past 0 has a robots delta, so no wave>0
-    manifest should carry a robots_cache entry — while compaction waves
-    still write every table so the delta log compacts on schedule. State
-    and resume must be byte-identical to the oracle regardless."""
+    pre-seeded and fresh, no wave past 0 has a robots delta, so no steady
+    wave's manifest should carry a robots_cache entry — while at each
+    compaction wave the store compacts the tables the wave omits, so the
+    delta log compacts on schedule. State and resume must be
+    byte-identical to the oracle regardless."""
     web = synthgen.generate(seed=11, n_pages=80, shape="mixed")
     wh = str(tmp_path / "wh")
     eng, seeds = build_engine(spark, web, wh, CFG)  # robots pre-seeded
@@ -291,7 +292,9 @@ def test_empty_deltas_skipped_and_resume_tolerates(spark, tmp_path):
     assert steady and all(
         "robots_cache" not in ms[w]["tables"] for w in steady)
     compactions = [w for w in ms if w > 0 and w % 3 == 0]
-    assert all("robots_cache" in ms[w]["tables"] for w in compactions)
+    assert compactions and all(
+        ms[w]["tables"]["robots_cache"]["mode"] == "compact"
+        for w in compactions)
     # correctness unchanged by the skipped writes
     o = oracle.crawl(web, CFG, max_waves=4)
     _assert_equal(res, o, web)

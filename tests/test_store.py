@@ -63,6 +63,12 @@ def test_manifest_is_commit_point(spark, tmp_path):
     s.commit_wave(1, {"seen": df})
     assert s.read("seen").count() == 6          # append mode unions deltas
     assert s.read("seen", upto_wave=0).count() == 3
+    # re-committing a wave replaces its manifest, on disk and in the log
+    s.commit_wave(1, {"seen": spark.range(3, 5).selectExpr("id as url")})
+    assert [m["wave"] for m in s.manifests()] == [0, 1]
+    assert s.read("seen").count() == 5
+    assert LocalSnapshotStore(spark, str(tmp_path)).manifests() \
+        == s.manifests()
 
 
 def test_iceberg_merge_sql():
@@ -245,6 +251,45 @@ def test_bucketed_table_compaction_and_adaptive_nb(spark, tmp_path):
                              initial_buckets=2, bucket_target_rows=8)
     assert st2._current_nb("seen") == 8
     assert st2.read_bucketed("seen")[1] == 8
+
+
+def test_compaction_folds_tables_the_wave_omits(spark, tmp_path):
+    """A compaction wave compacts every merge and bucketed table that has
+    committed rows, also one it passed no delta for: robots_cache and
+    store_keys become `compact` entries (store_keys regrown to the target
+    bucket size), every read returns what it did before, and a store
+    reopened on the path sees the same log."""
+    st = LocalSnapshotStore(spark, str(tmp_path), compact_every=2,
+                            initial_buckets=2, bucket_target_rows=1)
+
+    def robots(hosts, op="add"):
+        return spark.createDataFrame(
+            [(h, f"txt-{h}", op) for h in hosts],
+            "host string, robots_txt string, _op string")
+
+    def keys(ids):
+        return spark.createDataFrame([(i,) for i in ids], "image_id string")
+
+    def reads():
+        return {(t, w): sorted(tuple(r) for r in st.read(t, w).collect())
+                for t in ("robots_cache", "store_keys") for w in (0, 1, None)}
+
+    st.commit_wave(0, {"robots_cache": robots(["a", "b"]),
+                       "store_keys": keys(["i1", "i2"])})
+    st.commit_wave(1, {"robots_cache": robots(["b"], "remove"),
+                       "store_keys": keys(["i3"])})
+    before = reads()
+    st.commit_wave(2, {"trace": spark.createDataFrame(
+        [(2, "u")], "wave int, url string")})
+    tables = st.manifests()[2]["tables"]
+    assert tables["robots_cache"]["mode"] == "compact"
+    assert tables["store_keys"]["mode"] == "compact"
+    assert tables["store_keys"]["nb"] == 4  # 3 keys, 1 per bucket, pow2
+    assert reads() == before
+    assert st.read_bucketed("store_keys")[1] == 4
+    again = LocalSnapshotStore(spark, str(tmp_path), compact_every=2,
+                               initial_buckets=2, bucket_target_rows=1)
+    assert again.manifests() == st.manifests()
 
 
 def test_bucketed_compaction_dedup_is_deterministic(spark, tmp_path):

@@ -157,11 +157,11 @@ def main() -> None:
     out += [
         "## 3. Maintenance cadence (every compact_every waves)",
         "",
-        "LocalSnapshotStore folds deltas, doubles nb when buckets exceed",
-        "the target size, and prunes manifests at compaction waves. The",
-        "Iceberg deployment schedules the equivalent three maintenance",
-        "statements per state table at the same cadence (shown here for",
-        "an nb 1024 -> 2048 growth on the key tables):",
+        "At its compaction waves LocalSnapshotStore folds the deltas of",
+        "every merge and bucketed table and doubles nb when buckets",
+        "exceed the target size. The Iceberg deployment's equivalent",
+        "maintenance statements per state table (shown here for an nb",
+        "1024 -> 2048 growth on the key tables):",
         "",
         "```sql",
     ]
